@@ -56,7 +56,8 @@ def load_daily_transactions(
     """Read per-day transaction files with a deterministic sequence key.
 
     ONE multi-path scan (a per-file loop of reads costs a py4j round
-    trip + listing job per day and unions N plans); ``day_idx`` is
+    trip per day and unions N plans; past 32 paths Spark lists them in
+    a job, which ``build_session`` keeps on the driver); ``day_idx`` is
     recovered from the file name, and — each multiLine JSON file being
     a single split — ``monotonically_increasing_id`` enumerates rows
     in file order within each day. At production scale, transactions
