@@ -536,11 +536,6 @@ def buckets_of_values(
     return out
 
 
-def bucket_of_value(spark: SparkSession, table_dir: str, value) -> int:
-    """Single-key face of ``buckets_of_values``."""
-    return buckets_of_values(spark, table_dir, [value])[0]
-
-
 def keyset_lookup(
     spark: SparkSession,
     table_dir: str,

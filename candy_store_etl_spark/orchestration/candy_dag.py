@@ -5,17 +5,18 @@ whose tasks exchange intermediates through session temp views — views
 that do not survive the per-task SparkSessions the DAG creates, so the
 orchestrated form is structurally broken. This module publishes the
 WORKING topology: tasks exchange state only through persisted parquet
-stage directories (`plans/candy_pipeline.run_pipeline_staged`), so any
-task can run in its own session, process, or cluster and resume from
-the previous task's files.
+stage directories, so any task can run in its own session, process, or
+cluster and resume from the previous task's files. ``run_dag`` is the
+pipeline's parquet-staged form; the table-log staged form is
+``plans/candy_colocated.run_pipeline_tablelog``.
 
 The task graph is declared engine-side as plain data
 (``CANDY_DAG_TASKS``) and the Airflow binding is import-gated: where
 Airflow is installed, ``build_airflow_dag()`` returns a real
 ``airflow.DAG`` wired task-for-task from the same declaration; where
 it is not (this container), the declaration is still importable,
-topologically checkable, and is what the tests pin against the staged
-pipeline's actual write/read order.
+topologically checkable, and is what the tests pin against
+``run_stage``'s actual write/read order.
 """
 
 from __future__ import annotations
@@ -64,24 +65,12 @@ class StageContext:
     inputs live, where stage artifacts go, and how to get a session.
     Stages communicate ONLY through persisted artifacts under
     ``workdir`` — no temp views, no driver state (the reference DAG's
-    fatal flaw, `candy_store_pipeline_dag.py:147-207`).
-
-    ``stage_format`` picks the artifact kind: ``"parquet"`` (plain
-    directories — resumable, but each stage re-shuffles what the next
-    joins and artifacts have no history) or ``"table_log"`` (each
-    stage a VERSIONED table-log table; the fact-sized ones bucketed on
-    ``order_id`` with ``n_buckets``, so the orders-rollup⋈headers task
-    runs as the fused storage-partitioned join with zero fact
-    exchange, a re-run lands as a new atomic version instead of
-    clobbering files, and every stage output time-travels). Same task
-    graph, same outputs — pinned equal in tests/test_orchestration."""
+    fatal flaw, `candy_store_pipeline_dag.py:147-207`)."""
 
     session_factory: Callable[[], SparkSession]
     transaction_paths: tuple[str, ...]
     products_path: str
     workdir: str
-    stage_format: str = "parquet"
-    n_buckets: int = 16
 
     def stage(self, artifact: str) -> str:
         return os.path.join(self.workdir, artifact)
@@ -104,87 +93,34 @@ def run_stage(name: str, ctx: StageContext) -> None:
 
     spark = ctx.session_factory()
     reports = ctx.stage("reports")
-    tablelog = ctx.stage_format == "table_log"
-    if tablelog:
-        from ..operators.colocated import (
-            colocated_aggregate_join,
-            write_bucketed,
-        )
-        from ..plans.candy_colocated import (
-            FUSED_ORDER_AGGS,
-            dedup_headers,
-            fused_orders_select,
-            line_items_with_profit_term,
-        )
-        from ..sources import table_log as tl
 
     def _read(artifact: str):
-        if tablelog:
-            return tl.read_snapshot(spark, ctx.stage(artifact))
         return spark.read.parquet(ctx.stage(artifact))
-
-    def _write(df, artifact: str, *, bucket_key: str | None = None):
-        if tablelog:
-            # every stage is a versioned snapshot; fact-sized stages
-            # bucket on the join key so downstream tasks plan SPJs
-            if bucket_key is not None:
-                write_bucketed(
-                    df,
-                    ctx.stage(artifact),
-                    key_col=bucket_key,
-                    n_buckets=ctx.n_buckets,
-                )
-            else:
-                tl.overwrite(df, ctx.stage(artifact))
-        else:
-            write_partitioned(df, ctx.stage(artifact))
 
     if name == "load_transactions":
         # materializing the scan freezes day_idx/row_in_file, so every
         # downstream task sees one immutable sequence-keyed relation
-        _write(
+        write_partitioned(
             load_daily_transactions(spark, list(ctx.transaction_paths)),
-            "txns",
+            ctx.stage("txns"),
         )
     elif name == "build_line_items":
         txns = _read("txns")
         products = read_products(spark, ctx.products_path)
-        li = build_line_items(txns, products)
-        if tablelog:
-            # the stored profit_term makes the next task's rollup a
-            # pure stored-column aggregate (candy_colocated's shared
-            # helper — ONE definition with run_pipeline_tablelog);
-            # exports select their 5 columns, so the extra one rides
-            li = line_items_with_profit_term(li)
-        _write(li, "line_items", bucket_key="order_id" if tablelog else None)
+        write_partitioned(
+            build_line_items(txns, products), ctx.stage("line_items")
+        )
     elif name == "build_orders":
         txns = _read("txns")
-        if tablelog:
-            # the fused storage-partitioned rollup+join: headers land
-            # as their own bucketed stage table, then each bucket task
-            # aggregates its orders to completion and joins that
-            # bucket's headers locally — zero fact exchange (stage
-            # bodies shared with plans/candy_colocated.py so the two
-            # golden-parity forms cannot drift apart)
-            write_bucketed(
-                dedup_headers(txns),
-                ctx.stage("headers"),
-                key_col="order_id",
-                n_buckets=ctx.n_buckets,
-            )
-            rolled = colocated_aggregate_join(
-                spark,
-                ctx.stage("line_items"),
-                ctx.stage("headers"),
-                aggs=FUSED_ORDER_AGGS,
-            )
-            _write(fused_orders_select(rolled), "orders")
-        else:
-            line_items = _read("line_items")
-            _write(build_orders_with_profit(line_items, txns), "orders")
+        line_items = _read("line_items")
+        write_partitioned(
+            build_orders_with_profit(line_items, txns), ctx.stage("orders")
+        )
     elif name == "build_daily_summary":
         orders_full = _read("orders")
-        _write(build_daily_summary(orders_full), "daily_summary")
+        write_partitioned(
+            build_daily_summary(orders_full), ctx.stage("daily_summary")
+        )
     elif name == "export_line_items":
         line_items = _read("line_items")
         save_single_csv(
@@ -232,9 +168,9 @@ def build_airflow_dag(dag_id: str = "candy_store_pipeline", ctx: StageContext | 
     """Construct a real Airflow DAG from ``CANDY_DAG_TASKS``.
 
     Import-gated: raises ``ImportError`` where Airflow is absent. Each
-    task is a PythonOperator invoking the corresponding stage of
-    ``run_pipeline_staged`` with its own SparkSession — legal here
-    because stage boundaries are parquet, not temp views.
+    task is a PythonOperator invoking ``run_stage`` for that task with
+    its own SparkSession — legal here because stage boundaries are
+    parquet, not temp views.
     """
     from airflow import DAG  # noqa: PLC0415 — env-gated by design
     from airflow.operators.python import PythonOperator

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.rounding import SQL_FROUND, fround
 from ..operators.allocation import allocate_greedy, grouped_map_buckets
 from ..operators.multimodal import (
     attach_media_column,
@@ -19,7 +20,6 @@ from ..operators.multimodal import (
 from ..sources.tpch import load_table
 from ..timeseries.forecast import forecast_metrics
 from .registry import register
-from .rounding import SQL_FROUND, fround
 
 
 # ---------------------------------------------------------------------------

@@ -3,8 +3,8 @@ boundaries become hash-bucketed, versioned table-log tables, and the
 orders-rollup-joins-headers pass rides the fused co-located
 aggregate-join — zero exchange of line items, rollups, or headers.
 
-``run_pipeline_staged`` (the reference's Airflow DAG done right,
-`plans/candy_pipeline.py:234`) exchanges stages via plain parquet: a
+The orchestrated DAG (``orchestration.run_dag``, the reference's
+Airflow DAG done right) exchanges stages via plain parquet: a
 resumable boundary, but each stage re-shuffles what the next one
 joins, and stage outputs have no history. This variant writes each
 stage bucketed on its join key through the table log, so:
@@ -21,7 +21,7 @@ stage bucketed on its join key through the table log, so:
   downstream consumers can follow the stage's change feed.
 
 Output parity with ``run_pipeline`` is pinned in
-``tests/test_candy_colocated.py`` over the reference's own dataset.
+``tests/test_candy_colocated.py``.
 """
 
 from __future__ import annotations
@@ -37,23 +37,11 @@ from ..sources import table_log as tl
 from .candy_pipeline import (
     _ROUND2,
     build_daily_summary,
-    build_forecast,
     build_line_items,
-    build_products_updated,
+    dedup_headers,
+    five_outputs,
     load_daily_transactions,
 )
-
-
-# ONE definition of the fused-orders stage, shared with the
-# orchestrated DAG's table_log branch (orchestration/candy_dag.py):
-# both claim golden parity, so the profit-term expression, the header
-# dedup, the agg list, and the rounding point must not be able to
-# drift apart.
-FUSED_ORDER_AGGS = [
-    ("line_total", "sum", "amount_raw"),
-    ("order_id", "count", "num_items"),
-    ("profit_term", "sum", "order_profit"),
-]
 
 
 def line_items_with_profit_term(li: DataFrame) -> DataFrame:
@@ -65,18 +53,10 @@ def line_items_with_profit_term(li: DataFrame) -> DataFrame:
     )
 
 
-def dedup_headers(txns: DataFrame) -> DataFrame:
-    """One header row per order (reference's dropDuplicates)."""
-    return txns.select(
-        F.col("transaction_id").alias("order_id"),
-        F.col("timestamp").alias("order_datetime"),
-        "customer_id",
-    ).dropDuplicates(["order_id"])
-
-
 def fused_orders_select(rolled: DataFrame) -> DataFrame:
-    """The golden orders-with-profit projection over the fused
-    rollup+join output (reference money rounding on the amount)."""
+    """The golden orders-with-profit projection over a per-order
+    relation carrying the raw amount — the fused rollup+join output or
+    the maintained orders table (reference money rounding on it)."""
     return rolled.select(
         "order_id",
         "order_datetime",
@@ -129,7 +109,14 @@ def run_pipeline_tablelog(
     )
 
     rolled = colocated_aggregate_join(
-        spark, li_dir, hdr_dir, aggs=FUSED_ORDER_AGGS
+        spark,
+        li_dir,
+        hdr_dir,
+        aggs=[
+            ("line_total", "sum", "amount_raw"),
+            ("order_id", "count", "num_items"),
+            ("profit_term", "sum", "order_profit"),
+        ],
     )
     # overwrite, not append: a re-run with the same workdir must
     # REPLACE the orders relation (append would silently double every
@@ -139,16 +126,9 @@ def run_pipeline_tablelog(
 
     orders_full = tl.read_snapshot(spark, orders_dir)
     line_items = tl.read_snapshot(spark, li_dir)
-    daily = build_daily_summary(orders_full)
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit").orderBy("order_id"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
+    return five_outputs(
+        line_items, orders_full, build_daily_summary(orders_full), products
+    )
 
 
 def _ivm_dirs(workdir: str) -> tuple[str, str, str, str]:
@@ -385,15 +365,7 @@ def read_pipeline_outputs(
     paid it)."""
     li_dir, _, orders_dir, daily_dir = _ivm_dirs(workdir)
     line_items = tl.read_snapshot(spark, li_dir)
-    orders_tbl = tl.read_snapshot(spark, orders_dir)
-    orders_full = orders_tbl.select(
-        "order_id",
-        "order_datetime",
-        "customer_id",
-        _ROUND2(F.col("amount_raw")).alias("total_amount"),
-        "num_items",
-        "order_profit",
-    )
+    orders_full = fused_orders_select(tl.read_snapshot(spark, orders_dir))
     daily = (
         tl.read_snapshot(spark, daily_dir)
         .filter(F.col("num_orders") > 0)
@@ -405,15 +377,7 @@ def read_pipeline_outputs(
         )
         .orderBy("date")
     )
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit").orderBy("order_id"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
+    return five_outputs(line_items, orders_full, daily, products)
 
 
 def run_pipeline_incremental(
@@ -462,7 +426,7 @@ def run_pipeline_incremental(
     ``version=`` away. Re-invoking over the same workdir with an
     extended path list ingests only the new days (the append commit's
     meta is the day ledger). Outputs match ``run_pipeline``'s five
-    (parity pinned in tests over the reference's own dataset)."""
+    (parity pinned in tests/test_candy_colocated.py)."""
     for day_path in transaction_paths:
         ingest_days(
             spark, [day_path], products, workdir, n_buckets=n_buckets

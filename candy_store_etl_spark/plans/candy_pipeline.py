@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..caching import tracked_cache
 
-from ..operators.allocation import allocate_greedy, final_stock
+from ..operators.allocation import allocate_greedy
 from ..sources.candy import read_transactions
 from ..timeseries.forecast import forecast_wide
 
@@ -154,6 +154,15 @@ def build_products_updated(
     )
 
 
+def dedup_headers(transactions: DataFrame) -> DataFrame:
+    """One header row per order (reference's dropDuplicates)."""
+    return transactions.select(
+        F.col("transaction_id").alias("order_id"),
+        F.col("timestamp").alias("order_datetime"),
+        "customer_id",
+    ).dropDuplicates(["order_id"])
+
+
 def build_orders_with_profit(
     line_items: DataFrame, transactions: DataFrame
 ) -> DataFrame:
@@ -172,13 +181,8 @@ def build_orders_with_profit(
             F.col("line_total") - F.col("quantity") * F.col("cost_to_make")
         ).alias("order_profit"),
     )
-    headers = transactions.select(
-        F.col("transaction_id").alias("order_id"),
-        F.col("timestamp").alias("order_datetime"),
-        "customer_id",
-    ).dropDuplicates(["order_id"])
     return (
-        rollup.join(headers, "order_id")
+        rollup.join(dedup_headers(transactions), "order_id")
         .select(
             "order_id",
             "order_datetime",
@@ -188,15 +192,6 @@ def build_orders_with_profit(
             "order_profit",
         )
         .orderBy("order_id")
-    )
-
-
-def build_orders(
-    line_items: DataFrame, transactions: DataFrame
-) -> DataFrame:
-    """Reference-shaped orders output (golden orders.csv schema)."""
-    return build_orders_with_profit(line_items, transactions).drop(
-        "order_profit"
     )
 
 
@@ -230,47 +225,6 @@ def build_forecast(daily_summary: DataFrame, horizon: int = 1) -> DataFrame:
         metric_cols=["total_sales", "total_profit"],
         horizon=horizon,
     )
-
-
-def run_pipeline_staged(
-    spark: SparkSession,
-    transaction_paths: list[str],
-    products: DataFrame,
-    workdir: str,
-) -> dict[str, DataFrame]:
-    """The multi-stage (DAG/orchestrator) form of the pipeline.
-
-    The reference's Airflow variant passes intermediates between tasks
-    as session temp views, which do not survive the per-task
-    SparkSessions it creates — structurally broken
-    (`candy_store_pipeline_dag.py:147,162,171,198,206-207`; SURVEY
-    §3.3). Here every stage boundary is persisted parquet: any stage
-    can run in its own session/process/cluster and resume from the
-    previous stage's files.
-    """
-    from ..sources.sinks import write_partitioned
-
-    stage1 = os.path.join(workdir, "line_items")
-    txns = load_daily_transactions(spark, transaction_paths)
-    write_partitioned(build_line_items(txns, products), stage1)
-
-    line_items = spark.read.parquet(stage1)
-    stage2 = os.path.join(workdir, "orders")
-    # the staged relation carries order_profit so the next stage never
-    # re-aggregates line_items; the golden orders output drops it
-    write_partitioned(build_orders_with_profit(line_items, txns), stage2)
-
-    orders_full = spark.read.parquet(stage2)
-    daily = build_daily_summary(orders_full)
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit").orderBy("order_id"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
 
 
 def run_allocation_streaming(
@@ -360,6 +314,31 @@ def run_allocation_streaming(
     return spark.table(table_name)
 
 
+def five_outputs(
+    line_items: DataFrame,
+    orders_full: DataFrame,
+    daily: DataFrame,
+    products: DataFrame,
+) -> dict[str, DataFrame]:
+    """The five reference outputs from the pipeline's derived relations:
+    allocated ``line_items``, the profit-carrying ``orders_full`` and
+    the ``daily`` summary. The batch, table-log and incremental forms
+    all end here, so the output projections and orderings are defined
+    once."""
+    return {
+        "order_line_items": line_items.select(
+            "order_id", "product_id", "quantity", "unit_price", "line_total"
+        ).orderBy("order_id", "product_id"),
+        "products_updated": build_products_updated(line_items, products),
+        # over run_pipeline's cached orders_full, already sorted on
+        # order_id, this sort never runs: adaptive execution drops it
+        # once the cache is materialized (a bare InMemoryTableScan)
+        "orders": orders_full.drop("order_profit").orderBy("order_id"),
+        "daily_summary": daily,
+        "sales_profit_forecast": build_forecast(daily),
+    }
+
+
 def run_pipeline(
     spark: SparkSession,
     transaction_paths: list[str],
@@ -379,12 +358,4 @@ def run_pipeline(
     # to the JSON scan on every output
     orders_full = build_orders_with_profit(line_items, txns).transform(tracked_cache)
     daily = build_daily_summary(orders_full).transform(tracked_cache)
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
+    return five_outputs(line_items, orders_full, daily, products)

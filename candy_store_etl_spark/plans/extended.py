@@ -11,9 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.rounding import SQL_FROUND, SQL_MONEY_SUM, fround
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, SQL_MONEY_SUM, fround, money_sum
 
 
 # ---------------------------------------------------------------------------

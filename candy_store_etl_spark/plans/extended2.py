@@ -15,9 +15,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND, SQL_MONEY_SUM, fround, money_sum
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, SQL_MONEY_SUM, fround, money_sum
 
 _CENTS = lambda c: F.floor(c * 100 + F.lit(0.5))  # noqa: E731
 _SQL_CENTS = lambda e: f"FLOOR(({e})*100 + 0.5)"  # noqa: E731

@@ -8,9 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND, fround
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, fround
 
 
 # ---------------------------------------------------------------------------

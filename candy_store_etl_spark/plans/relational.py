@@ -18,9 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND, SQL_MONEY_SUM, fround, money_sum
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, SQL_MONEY_SUM, fround, money_sum
 
 __all__ = ["SQL_FROUND", "SQL_MONEY_SUM", "fround", "money_sum"]
 

@@ -19,9 +19,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND
 
 _N_BUCKETS = 16
 

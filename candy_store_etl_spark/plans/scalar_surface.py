@@ -9,10 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND, fround
 from ..functions.text import tokens
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, fround
 
 # ---------------------------------------------------------------------------
 # Null-handling family: nullif / ifnull / coalesce / null-safe equality.

@@ -21,6 +21,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.rounding import SQL_MONEY_SUM
 from ..streaming.events import (
     dedup_event_stream,
     run_stream_to_memory,
@@ -30,7 +31,6 @@ from ..streaming.events import (
     windowed_event_stats,
 )
 from .registry import register
-from .rounding import SQL_MONEY_SUM
 
 
 _STAGE_CACHE: dict[str, str] = {}

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND, fround
 from ..functions.text import (
     avg_token_len,
     distinct_ratio,
@@ -18,7 +19,6 @@ from ..functions.text import (
 )
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, fround
 
 # DuckDB twin of functions.text.tokens (whitespace split, no empties).
 _SQL_TOKENS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x != '')"

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.rounding import SQL_FROUND, fround
 from ..functions.vectors import cosine_similarity, to_double_array
 from ..operators.dedup import minhash_dedup_pairs, simhash_neardup_pairs
 from ..operators.similarity import (
@@ -17,7 +18,6 @@ from ..operators.similarity import (
 )
 from ..sources.tpch import load_table
 from .registry import register
-from .rounding import SQL_FROUND, fround
 
 # DuckDB twins of functions.vectors (explicit double math, same
 # left-to-right fold as Spark's aggregate()).

@@ -9,14 +9,14 @@ because schema inference over 100 TB means a sampling scan you never
 wanted.
 
 The transactions relation is the one genuinely nested input: an
-``items`` array of structs, flattened downstream with ``explode``
-(reference `data_processor.py:123-132`).
+``items`` array of structs, flattened downstream with ``posexplode``
+(``plans/candy_pipeline.build_line_items``; reference
+`data_processor.py:123-132`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DecimalType,
@@ -136,26 +136,4 @@ def read_jdbc(spark: SparkSession, url: str, table: str, **options: str) -> Data
         spark.read.format("jdbc")
         .options(**jdbc_reader_options(url, table, **options))
         .load()
-    )
-
-
-def explode_items(transactions: DataFrame) -> DataFrame:
-    """Flatten the nested items array — one row per line item.
-
-    Reference `data_processor.py:123-132`. ``explode`` (not
-    ``explode_outer``): transactions with an empty/null items array
-    produce no rows, matching the reference.
-    """
-    return transactions.select(
-        F.col("transaction_id").alias("order_id"),
-        F.col("customer_id"),
-        F.col("timestamp").alias("order_datetime"),
-        F.explode("items").alias("item"),
-    ).select(
-        "order_id",
-        "customer_id",
-        "order_datetime",
-        F.col("item.product_id").alias("product_id"),
-        F.col("item.product_name").alias("product_name"),
-        F.col("item.qty").alias("qty"),
     )

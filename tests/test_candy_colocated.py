@@ -1,6 +1,7 @@
 """The table-log/SPJ candy pipeline must equal the single-session
-pipeline on the reference's own dataset, and its stage boundaries
-must behave like tables: versioned, time-travelable, bucketed."""
+pipeline (on the reference's own dataset where present, else on the
+seeded ``candy_input`` fixture), and its stage boundaries must behave
+like tables: versioned, time-travelable, bucketed."""
 
 from __future__ import annotations
 
@@ -17,13 +18,15 @@ REF_DATA = "/root/reference/data/dataset_5"
 
 
 @pytest.fixture(scope="module")
-def candy_paths():
+def candy_data(candy_input):
+    """``(day_paths, products_csv)``: the reference's dataset where
+    present, else the seeded ``candy_input`` fixture."""
     if not os.path.isdir(REF_DATA):
-        pytest.skip("reference dataset not present")
+        return candy_input
     return [
         os.path.join(REF_DATA, f"transactions_202402{d:02d}.json")
         for d in range(1, 11)
-    ]
+    ], os.path.join(REF_DATA, "products.csv")
 
 
 def _rows(df, *order_cols):
@@ -31,7 +34,7 @@ def _rows(df, *order_cols):
 
 
 def test_tablelog_pipeline_matches_single_session(
-    spark, tmp_path, candy_paths
+    spark, tmp_path, candy_data
 ):
     from candy_store_etl_spark.plans.candy_colocated import (
         run_pipeline_tablelog,
@@ -39,9 +42,8 @@ def test_tablelog_pipeline_matches_single_session(
     from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
     from candy_store_etl_spark.sources.candy import read_products
 
-    products = read_products(
-        spark, os.path.join(REF_DATA, "products.csv")
-    )
+    candy_paths, products_csv = candy_data
+    products = read_products(spark, products_csv)
     got = run_pipeline_tablelog(
         spark, candy_paths, products, str(tmp_path / "tl")
     )
@@ -70,16 +72,15 @@ def test_tablelog_pipeline_matches_single_session(
 
 
 def test_stage_boundaries_are_versioned_bucketed_tables(
-    spark, tmp_path, candy_paths
+    spark, tmp_path, candy_data
 ):
     from candy_store_etl_spark.plans.candy_colocated import (
         run_pipeline_tablelog,
     )
     from candy_store_etl_spark.sources.candy import read_products
 
-    products = read_products(
-        spark, os.path.join(REF_DATA, "products.csv")
-    )
+    candy_paths, products_csv = candy_data
+    products = read_products(spark, products_csv)
     work = str(tmp_path / "tl")
     run_pipeline_tablelog(spark, candy_paths[:3], products, work)
     li = os.path.join(work, "line_items_tl")
@@ -116,10 +117,10 @@ def test_stage_boundaries_are_versioned_bucketed_tables(
 
 
 def test_incremental_pipeline_matches_single_session(
-    spark, tmp_path, candy_paths
+    spark, tmp_path, candy_data
 ):
     """Two-hop IVM over the stage tables equals the all-at-once batch
-    pipeline on the reference's own dataset — every output, including
+    pipeline on the candy dataset — every output, including
     allocation (sequential greedy over the carried stock remainder ==
     the batch's global ordered pass) and the per-day summary
     (signed-folded from the rollup's change feed)."""
@@ -129,9 +130,8 @@ def test_incremental_pipeline_matches_single_session(
     from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
     from candy_store_etl_spark.sources.candy import read_products
 
-    products = read_products(
-        spark, os.path.join(REF_DATA, "products.csv")
-    )
+    candy_paths, products_csv = candy_data
+    products = read_products(spark, products_csv)
     got = run_pipeline_incremental(
         spark, candy_paths, products, str(tmp_path / "ivm")
     )
@@ -157,7 +157,7 @@ def test_incremental_pipeline_matches_single_session(
 
 
 def test_incremental_pipeline_extends_without_reprocessing(
-    spark, tmp_path, candy_paths
+    spark, tmp_path, candy_data
 ):
     """Day N+1 arrives: the maintenance chain appends ONE line-items
     version and merges one batch per hop — the earlier days' stage
@@ -169,9 +169,8 @@ def test_incremental_pipeline_extends_without_reprocessing(
     from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
     from candy_store_etl_spark.sources.candy import read_products
 
-    products = read_products(
-        spark, os.path.join(REF_DATA, "products.csv")
-    )
+    candy_paths, products_csv = candy_data
+    products = read_products(spark, products_csv)
     work = str(tmp_path / "ivm")
     run_pipeline_incremental(spark, candy_paths[:3], products, work)
     li = os.path.join(work, "line_items_tl")

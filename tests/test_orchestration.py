@@ -1,7 +1,6 @@
-"""The DAG declaration must match the staged pipeline's real
-topology: every stage read must be preceded by its producing write,
-and the terminal artifacts must be exactly the five reference
-outputs."""
+"""The DAG declaration must match run_stage's real topology: every
+stage read must be preceded by its producing write, and the terminal
+artifacts must be exactly the five reference outputs."""
 
 from __future__ import annotations
 
@@ -40,8 +39,8 @@ def test_terminal_artifacts_are_the_five_reference_outputs():
 
 
 def test_stage_artifacts_match_staged_pipeline():
-    # run_pipeline_staged persists line_items then orders, and derives
-    # daily/forecast from the orders stage — the DAG must agree
+    # run_stage persists line_items then orders, and derives
+    # daily/forecast from the orders stage — the declaration must agree
     arts = {name: art for name, (_, art) in CANDY_DAG_TASKS.items()}
     assert arts["build_line_items"] == "line_items"
     assert arts["build_orders"] == "orders"
@@ -57,11 +56,15 @@ def test_airflow_binding_is_import_gated():
     assert len(dag.tasks) == len(CANDY_DAG_TASKS)
 
 
-def test_run_dag_executes_full_graph_and_matches_pipeline(spark, tmp_path):
+def test_run_dag_executes_full_graph_and_matches_pipeline(
+    spark, tmp_path, candy_input
+):
     """Drive every task through run_stage in topological order (exactly
     what the Airflow PythonOperators do) and require the five report
     CSVs to equal the single-session pipeline's outputs — proving the
-    graph really is resumable from parquet stage boundaries alone."""
+    graph really is resumable from parquet stage boundaries alone.
+    Runs on the reference's dataset where present, else on the seeded
+    ``candy_input`` fixture."""
     import os
 
     import pandas as pd
@@ -72,91 +75,29 @@ def test_run_dag_executes_full_graph_and_matches_pipeline(spark, tmp_path):
     from candy_store_etl_spark.sources.sinks import save_single_csv
 
     ref_data = "/root/reference/data/dataset_5"
-    if not os.path.isdir(ref_data):
-        pytest.skip("reference dataset not present")
-    dates = [f"202402{d:02d}" for d in range(1, 11)]
-    paths = tuple(
-        os.path.join(ref_data, f"transactions_{d}.json") for d in dates
-    )
+    if os.path.isdir(ref_data):
+        dates = [f"202402{d:02d}" for d in range(1, 11)]
+        paths = tuple(
+            os.path.join(ref_data, f"transactions_{d}.json") for d in dates
+        )
+        products_path = os.path.join(ref_data, "products.csv")
+    else:
+        paths, products_path = tuple(candy_input[0]), candy_input[1]
 
     ctx = StageContext(
         session_factory=lambda: spark,
         transaction_paths=paths,
-        products_path=os.path.join(ref_data, "products.csv"),
+        products_path=products_path,
         workdir=str(tmp_path / "dagwork"),
     )
     run_dag(ctx)
+    # the fact stage boundaries are real parquet directories on disk
+    for artifact in ("line_items", "orders"):
+        stage = ctx.stage(artifact)
+        assert os.path.isdir(stage), artifact
+        assert any(f.endswith(".parquet") for f in os.listdir(stage)), artifact
 
     # the one-session pipeline, exported through the same CSV sink
-    want_dir = str(tmp_path / "want")
-    products = read_products(spark, ctx.products_path)
-    for name, df in run_pipeline(spark, list(paths), products).items():
-        if name == "order_line_items":
-            df = df.orderBy("order_id", "product_id")
-        elif name == "orders":
-            df = df.orderBy("order_id")
-        elif name == "daily_summary":
-            df = df.orderBy("date")
-        save_single_csv(df, want_dir, f"{name}.csv")
-
-    for name in [
-        "order_line_items",
-        "products_updated",
-        "orders",
-        "daily_summary",
-        "sales_profit_forecast",
-    ]:
-        got = pd.read_csv(os.path.join(ctx.workdir, "reports", f"{name}.csv"))
-        want = pd.read_csv(os.path.join(want_dir, f"{name}.csv"))
-        pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=name)
-
-
-def test_run_dag_tablelog_stages_match_pipeline(spark, tmp_path):
-    """The SAME task graph with stage_format='table_log': every stage
-    artifact is a versioned table-log table (fact stages bucketed on
-    order_id, so build_orders rides the fused storage-partitioned
-    rollup+join), and the five report CSVs still equal the
-    single-session pipeline's — orchestration, table format, and the
-    SPJ composed over the reference's own workload."""
-    import os
-
-    import pandas as pd
-
-    from candy_store_etl_spark.operators.colocated import bucket_spec
-    from candy_store_etl_spark.orchestration import StageContext, run_dag
-    from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
-    from candy_store_etl_spark.sources import table_log as tl
-    from candy_store_etl_spark.sources.candy import read_products
-    from candy_store_etl_spark.sources.sinks import save_single_csv
-
-    ref_data = "/root/reference/data/dataset_5"
-    if not os.path.isdir(ref_data):
-        pytest.skip("reference dataset not present")
-    dates = [f"202402{d:02d}" for d in range(1, 11)]
-    paths = tuple(
-        os.path.join(ref_data, f"transactions_{d}.json") for d in dates
-    )
-
-    ctx = StageContext(
-        session_factory=lambda: spark,
-        transaction_paths=paths,
-        products_path=os.path.join(ref_data, "products.csv"),
-        workdir=str(tmp_path / "tlwork"),
-        stage_format="table_log",
-    )
-    run_dag(ctx)
-
-    # stage artifacts are committed table-log tables; the fact stages
-    # carry the bucket spec the SPJ planned against
-    for artifact in ("txns", "line_items", "headers", "orders",
-                     "daily_summary"):
-        assert tl.current_version(ctx.stage(artifact)) == 0, artifact
-    for artifact in ("line_items", "headers"):
-        assert bucket_spec(ctx.stage(artifact)) == {
-            "key": "order_id",
-            "n": 16,
-        }, artifact
-
     want_dir = str(tmp_path / "want")
     products = read_products(spark, ctx.products_path)
     for name, df in run_pipeline(spark, list(paths), products).items():
